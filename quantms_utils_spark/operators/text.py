@@ -115,24 +115,33 @@ def content_fingerprint(col: Column) -> Column:
 
 def normalized_tokens(col: Column) -> Column:
     """Whitespace-split tokens of lowercased, whitespace-normalized text;
-    empty array for blank text."""
+    empty array for blank text. After the collapse and trim the only empty
+    token is the one ``split`` makes of blank text, which ``array_remove``
+    drops — so the regex replace appears once in the expression."""
     trimmed = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-    return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(trimmed, " ")
-    )
+    return F.array_remove(F.split(trimmed, " "), "")
 
 
 def word_ngrams(tokens: Column, n: int) -> Column:
     """Word n-grams as space-joined strings (array<string>, empty when the
     document has fewer than ``n`` tokens). Pure Catalyst: sequence over start
-    positions + slice + concat_ws — no explode, no Python."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    positions + slice + concat_ws — no explode, no Python.
+
+    ``tokens`` is let-bound (:func:`_let`) so it is evaluated once per row:
+    captured directly inside the transform lambda, a computed token array
+    (e.g. :func:`normalized_tokens`' regex replace and split) would be
+    recomputed per n-gram, O(words²) per document."""
+
+    def _grams(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return _let(tokens, _grams)
 
 
 def repetition_signals(

@@ -17,9 +17,10 @@ DataFrame expressions. This replaces the top-N-base-peak *seeding* stand-in
    duplicate instance is dropped afterwards by the home-bin rule
    (floor(weighted-mean m/z) must equal the bin that built the trace).
 3. **Trace detection**: within a cluster (one peak per scan — strongest
-   shoulder wins), scans sorted by spectrum index are gap-sessionized with
-   ``max_scan_gap`` tolerance; surviving runs of ≥ ``min_scans`` scans are
-   mass traces.
+   shoulder wins), scans sorted by their MS1 ordinal (rank among the run's
+   MS1 spectra, so interleaved MS2 spectra are not gaps) are
+   gap-sessionized with ``max_scan_gap`` tolerance; surviving runs of
+   ≥ ``min_scans`` scans are mass traces.
 4. **Isotope grouping**: traces of the same run whose rt spans overlap and
    whose m/z spacing matches 1.003355/z for z ∈ {1..max_charge} (within
    ``iso_tol``) are linked; per-trace only its best-fitting charge's edges
@@ -48,19 +49,34 @@ ISO_SPACING = 1.003355
 def explode_ms1_peaks(
     spectra: DataFrame, min_mz: float = 1.0, min_intensity: float = 0.0
 ) -> DataFrame:
-    """MS1 peak rows (run, spectrum_index, scan, rt, mz, intensity)."""
-    ms1 = spectra.filter(F.col("ms_level") == 1).filter(
-        F.array_min("mz_array") > min_mz
+    """MS1 peak rows (run, spectrum_index, ms1_index, scan, rt, mz,
+    intensity).
+
+    ``ms1_index`` is the scan's 1-based ordinal among the run's MS1 spectra.
+    Adjacent MS1 scans differ by 1 in it however many MS2 spectra sit
+    between them in ``spectrum_index``, so scan gaps are measured in MS1
+    scans. It is ranked before the corrupt-spectrum filter, so a dropped
+    MS1 scan still counts as a gap.
+    """
+    ms1 = (
+        spectra.filter(F.col("ms_level") == 1)
+        .withColumn(
+            "ms1_index",
+            F.row_number().over(Window.partitionBy(RUN).orderBy("spectrum_index")),
+        )
+        .filter(F.array_min("mz_array") > min_mz)
     )
     peaks = ms1.select(
         RUN,
         "spectrum_index",
+        "ms1_index",
         "scan",
         "rt",
         F.explode(F.arrays_zip("mz_array", "intensity_array")).alias("p"),
     ).select(
         RUN,
         "spectrum_index",
+        "ms1_index",
         "scan",
         "rt",
         F.col("p.mz_array").alias("mz"),
@@ -119,11 +135,12 @@ def detect_mass_traces(
         F.col("r") == 1
     )
 
-    # --- trace detection: gap-sessionize along the scan axis ----------------
-    w_rt = Window.partitionBy(RUN, "bin", "cluster").orderBy("spectrum_index")
+    # --- trace detection: gap-sessionize along the MS1 scan axis ------------
+    # on the MS1 ordinal, not spectrum_index: MS2 spectra between two MS1
+    # scans are not missing MS1 scans
+    w_rt = Window.partitionBy(RUN, "bin", "cluster").orderBy("ms1_index")
     new_trace = (
-        F.col("spectrum_index") - F.lag("spectrum_index").over(w_rt)
-        > max_scan_gap + 1
+        F.col("ms1_index") - F.lag("ms1_index").over(w_rt) > max_scan_gap + 1
     ).cast("int")
     traced = best.withColumn(
         "trace",
@@ -146,8 +163,8 @@ def detect_mass_traces(
             F.max("rt").alias("max_rt"),
             F.min("mz").alias("min_mz"),
             F.max("mz").alias("max_mz"),
-            F.min("spectrum_index").alias("min_idx"),
-            F.max("spectrum_index").alias("max_idx"),
+            F.min("ms1_index").alias("min_idx"),
+            F.max("ms1_index").alias("max_idx"),
             F.count(F.lit(1)).alias("num_scans"),
             F.sort_array(F.collect_list("scan")).alias("scans"),
         )

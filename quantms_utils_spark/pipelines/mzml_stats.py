@@ -7,8 +7,9 @@ python loop becomes pure DataFrame expressions:
 - peak stats (A1-A3) are array expressions — no explode, no UDF;
 - the precursor as-of lookup (J7, reference :253-260 walks back to the
   nearest preceding MS1) is a window ``last(..., ignorenulls)`` partitioned
-  by run — one shuffle on the run key, which is also the ingest partitioning,
-  so AQE usually elides the exchange;
+  by run — one shuffle on the run key (the ingest already holds one run per
+  partition, but its range-indexed scan declares no partitioning, so the
+  exchange stays);
 - precursor purity (U5, reference :264-268 delegates to C++) is re-expressed
   relationally: the preceding MS1's peak arrays ride along the same window,
   and an aggregate-over-zip computes in-isolation-window totals;
@@ -248,6 +249,13 @@ def write_tables(
     (`reference_file_name=...`): at corpus scale every per-run read (the
     reference's whole access pattern — one invocation per file) becomes
     partition PRUNING instead of a scan-and-filter over the combined table.
+
+    Parse once: every table is its own Spark job over ``spectra``, and an
+    uncached source frame re-parses every file per job. When more than one
+    table is written, ``spectra`` is persisted for the duration of the call
+    and unpersisted in a ``finally`` — also when a write raises — so the
+    files are parsed once and the cache does not outlive the call. A frame
+    the caller already cached is used as is and left cached.
     """
 
     def _write(df: DataFrame, target: str) -> None:
@@ -256,26 +264,33 @@ def write_tables(
             writer = writer.partitionBy(RUN)
         writer.parquet(target, compression=compression)
 
+    cache = (ms2_file or feature_detection) and not spectra.is_cached
+    if cache:
+        spectra.persist()
     outputs: dict[str, str] = {}
-    target = f"{out_dir}/{stem}_ms_info.parquet"
-    _write(compute_ms_info(spectra), target)
-    outputs["ms_info"] = target
-    if ms2_file:
-        target = f"{out_dir}/{stem}_ms2_info.parquet"
-        _write(compute_ms2_info(spectra), target)
-        outputs["ms2_info"] = target
-    if feature_detection:
-        target = f"{out_dir}/{stem}_ms1_feature_info.parquet"
-        if feature_method == "masstrace":
-            from quantms_utils_spark.pipelines.feature_finder import (
-                detect_features_masstrace,
-            )
+    try:
+        target = f"{out_dir}/{stem}_ms_info.parquet"
+        _write(compute_ms_info(spectra), target)
+        outputs["ms_info"] = target
+        if ms2_file:
+            target = f"{out_dir}/{stem}_ms2_info.parquet"
+            _write(compute_ms2_info(spectra), target)
+            outputs["ms2_info"] = target
+        if feature_detection:
+            target = f"{out_dir}/{stem}_ms1_feature_info.parquet"
+            if feature_method == "masstrace":
+                from quantms_utils_spark.pipelines.feature_finder import (
+                    detect_features_masstrace,
+                )
 
-            _write(
-                detect_features_masstrace(spectra, **(feature_options or {})),
-                target,
-            )
-        else:
-            _write(detect_features(spectra, **(feature_options or {})), target)
-        outputs["ms1_features"] = target
+                _write(
+                    detect_features_masstrace(spectra, **(feature_options or {})),
+                    target,
+                )
+            else:
+                _write(detect_features(spectra, **(feature_options or {})), target)
+            outputs["ms1_features"] = target
+    finally:
+        if cache:
+            spectra.unpersist()
     return outputs

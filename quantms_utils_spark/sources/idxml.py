@@ -1,10 +1,12 @@
 """Distributed idXML PSM ingestion (SURVEY §2.1 S3, §2.10 U4).
 
-One idXML file (= one search run) per partition, parsed inside mapInPandas to
-*nested* PSM rows: a peptide identification carries an array of hits, each
-hit an array of protein evidences. The relational explode happens downstream
-in pipelines/psm.py — so the parser yields data in the shape the file has,
-and Catalyst handles the flattening.
+One idXML file (= one search run) per partition and per task: the same
+range-indexed scan as sources/mzml.py (``sources/filescan.py``,
+``spark.range(0, n, 1, n)``, task ``i`` parses ``paths[i]``), parsed inside
+mapInPandas to *nested* PSM rows: a peptide identification carries an array
+of hits, each hit an array of protein evidences. The relational explode
+happens downstream in pipelines/psm.py — so the parser yields data in the
+shape the file has, and Catalyst handles the flattening.
 
 Backends mirror sources/mzml.py: ``pyopenms`` (real IdXMLFile parsing,
 reference psm_conversion.py:87-93) gated behind import; ``xml`` (pure-Python
@@ -18,7 +20,7 @@ any input files. ``auto`` = pyopenms > xml (if the file exists) > synthetic.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from pathlib import Path
 
 import numpy as np
@@ -32,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from quantms_utils_spark.sources.filescan import scan_files
 
 HIT_SCHEMA = StructType(
     [
@@ -138,7 +142,9 @@ def read_identifications(
     paths: Sequence[str],
     parser: str = "auto",
 ) -> DataFrame:
-    """Nested identifications DataFrame; one partition per idXML file."""
+    """Nested identifications DataFrame: a range-indexed scan
+    (``sources.filescan.scan_files``) where task ``i`` parses ``paths[i]``,
+    so there is exactly one partition, and one task, per idXML file."""
     if parser == "auto":
         if HAVE_PYOPENMS:  # pragma: no cover - needs pyopenms
             parser = "pyopenms"
@@ -152,28 +158,14 @@ def read_identifications(
             "parsing) or 'synthetic'"
         )
 
-    if not paths:
-        raise ValueError(
-            "read_identifications: paths must be non-empty (an empty run list "
-            "is a caller bug; repartition(0) would raise a cryptic "
-            "engine error instead)"
-        )
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(len(paths), "path")
+    def parse_one(path: str) -> pd.DataFrame:
+        if parser == "pyopenms":  # pragma: no cover - needs pyopenms
+            return _parse_pyopenms_idxml(path)
+        if parser == "xml":
+            return _parse_xml_idxml(path)
+        return synthetic_identifications(Path(path).name.split(".")[0])
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                stem = Path(path).name.split(".")[0]
-                if parser == "pyopenms":  # pragma: no cover - needs pyopenms
-                    yield _parse_pyopenms_idxml(path)
-                elif parser == "xml":
-                    yield _parse_xml_idxml(path)
-                else:
-                    yield synthetic_identifications(stem)
-
-    return paths_df.mapInPandas(parse, schema=PSM_ID_SCHEMA)
+    return scan_files(spark, paths, parse_one, PSM_ID_SCHEMA)
 
 
 def _parse_xml_idxml(path: str) -> pd.DataFrame:

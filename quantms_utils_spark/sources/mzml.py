@@ -2,8 +2,10 @@
 
 Architecture: one input *file/run* is the unit of parallelism (the reference
 is a single-process loop over one file, mzml_statistics.py:399-400; a 100 TB
-corpus is tens of thousands of runs). Paths are distributed one-per-partition
-and parsed inside ``mapInPandas`` — Arrow-batched, bounded memory per task —
+corpus is tens of thousands of runs). The scan is range-indexed
+(``sources/filescan.py``): ``spark.range(0, n, 1, n)`` gives one partition
+per file, and task ``i`` parses ``paths[i]`` inside ``mapInPandas`` —
+Arrow-batched, bounded memory per task, no exchange in front of the parse —
 yielding a row-per-spectrum DataFrame with peak arrays, carrying a
 monotonically increasing ``spectrum_index`` so document order (SURVEY O2)
 survives distribution.
@@ -27,7 +29,7 @@ path resolves to an existing file, else ``synthetic``.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from pathlib import Path
 
 import numpy as np
@@ -42,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from quantms_utils_spark.sources.filescan import scan_files
 
 SPECTRUM_SCHEMA = StructType(
     [
@@ -176,37 +180,27 @@ def read_spectra(
     parser: str = "auto",
     synthetic_spectra_per_file: int = 200,
 ) -> DataFrame:
-    """Spectra DataFrame over many runs; one partition per file."""
+    """Spectra DataFrame over many runs: a range-indexed scan
+    (``sources.filescan.scan_files``) where task ``i`` parses ``paths[i]``,
+    so there is exactly one partition, and one task, per file."""
     parser = resolve_parser(parser, paths)
-
     levels = list(ms_levels) if ms_levels else None
-    if not paths:
-        raise ValueError(
-            "read_spectra: paths must be non-empty (an empty run list "
-            "is a caller bug; repartition(0) would raise a cryptic "
-            "engine error instead)"
-        )
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(len(paths), "path")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                if parser == "pyopenms":  # pragma: no cover - needs pyopenms
-                    out = _parse_pyopenms(resolve_ms_path(path), levels)
-                elif parser == "xml":
-                    from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
+    def parse_one(path: str) -> pd.DataFrame:
+        if parser == "pyopenms":  # pragma: no cover - needs pyopenms
+            out = _parse_pyopenms(resolve_ms_path(path), levels)
+        elif parser == "xml":
+            from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
 
-                    out = parse_mzml_xml(resolve_ms_path(path), levels)
-                else:
-                    stem = Path(path).name.split(".")[0]
-                    out = synthetic_spectra(stem, synthetic_spectra_per_file)
-                if levels:
-                    out = out[out["ms_level"].isin(levels)]
-                yield out
+            out = parse_mzml_xml(resolve_ms_path(path), levels)
+        else:
+            stem = Path(path).name.split(".")[0]
+            out = synthetic_spectra(stem, synthetic_spectra_per_file)
+        if levels:
+            out = out[out["ms_level"].isin(levels)]
+        return out
 
-    return paths_df.mapInPandas(parse, schema=SPECTRUM_SCHEMA)
+    return scan_files(spark, paths, parse_one, SPECTRUM_SCHEMA)
 
 
 def resolve_parser(parser: str, paths: Sequence[str]) -> str:

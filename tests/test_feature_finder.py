@@ -23,8 +23,10 @@ N_SCANS = 12
 ISO = 1.003355
 
 
-def _mk_run(spark, with_straddler=False):
-    """12 MS1 scans at rt = 10*i. Signals:
+def _mk_run(spark, with_straddler=False, ms2_per_ms1=0):
+    """12 MS1 scans at rt = 10*i, each followed by ``ms2_per_ms1`` MS2
+    spectra (their peaks sit on the implanted m/z values too, so an MS1
+    trace that picked them up would show it). Signals:
     - trace A (mono of a z=2 pair): m/z 500.000, scans 2..8, apex scan 5
     - trace B (isotope partner):   m/z 500.5017, scans 3..8
     - trace C (singleton):         m/z 620.300, scans 4..9
@@ -53,13 +55,21 @@ def _mk_run(spark, with_straddler=False):
         put(900.0 + 7.0 * i, 5.0)  # wandering noise, never forms a trace
 
         order = sorted(range(len(mz)), key=lambda k: mz[k])
+        idx = i * (1 + ms2_per_ms1)
         rows.append(
             (
-                "runF", i, str(i), 1, 10.0 * i,
+                "runF", idx, str(idx), 1, 10.0 * i,
                 [mz[k] for k in order], [it[k] for k in order],
                 None, None, None, None,
             )
         )
+        for j in range(1, ms2_per_ms1 + 1):
+            rows.append(
+                (
+                    "runF", idx + j, str(idx + j), 2, 10.0 * i + j,
+                    [500.0, 620.3], [1e6, 1e6], 2, 500.0, 150.0, None,
+                )
+            )
     return spark.createDataFrame(rows, SPECTRUM_SCHEMA)
 
 
@@ -76,6 +86,24 @@ class TestMassTraces:
         assert b["num_scans"] == 6
         assert c["trace_mz"] == pytest.approx(620.3, abs=0.01)
         assert c["scans"] == [str(i) for i in range(4, 10)]
+
+    def test_traces_recovered_between_interleaved_ms2(self, spark):
+        """A DDA run: four MS2 spectra after every MS1 scan. Gaps are
+        counted in MS1 scans, so the MS1-only traces come back unchanged."""
+        traces = detect_mass_traces(
+            _mk_run(spark, ms2_per_ms1=4), min_scans=3
+        ).collect()
+        by_mz = sorted(traces, key=lambda r: r["trace_mz"])
+        assert len(by_mz) == 3
+        a, b, c = by_mz
+        assert a["trace_mz"] == pytest.approx(500.0, abs=0.01)
+        assert a["num_scans"] == 7
+        assert a["apex_rt"] == pytest.approx(50.0)
+        # MS1 ordinals (1-based): the span feature_quality divides by
+        assert (a["min_idx"], a["max_idx"]) == (3, 9)
+        assert b["num_scans"] == 6
+        assert c["trace_mz"] == pytest.approx(620.3, abs=0.01)
+        assert c["scans"] == sorted(str(5 * i) for i in range(4, 10))
 
     def test_boundary_straddler_found_once(self, spark):
         traces = detect_mass_traces(

@@ -180,6 +180,20 @@ class TestLetBindingPinsSingleEvaluation:
         # split() inside the array_join lambda
         assert plan.count("split(") <= 2, plan
 
+    def test_word_ngrams_normalizes_once_per_row(self, spark):
+        import pyspark.sql.functions as F
+
+        from quantms_utils_spark.operators.text import normalized_tokens, word_ngrams
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        grams = docs.select(
+            word_ngrams(normalized_tokens(F.col("text")), 5).alias("g")
+        )
+        plan = _optimized_plan(grams)
+        # the token array is let-bound: captured inside the per-gram slice
+        # lambda, the regex replace would run once per n-gram
+        assert plan.count("regexp_replace") == 1, plan
+
     def test_unit_vector_norm_computed_once(self, spark):
         import pyspark.sql.functions as F
 
